@@ -208,14 +208,17 @@ final class VectorIndexFlat private (
 
   /** k-nearest-neighbor search.
     *
+    * The query batch is collected to the driver (one probe, bounded by
+    * `maxFusedQueryBytes`) and every query must have dimension `d`.
     * Physical path selection (the analog of the reference's fused-kernel
-    * gate, `src/MetalDistance.mm:341-363`): when the query batch is small
-    * enough to broadcast (the serving-style case), the fused path runs
-    * distance + per-partition bounded top-k in one tight primitive loop
-    * per vector partition and shuffles only nq·k rows per partition —
-    * never materializing a (pair) row per (q, v). Large query batches fall
-    * back to the declarative cross-join + aggregate plan, which Catalyst
-    * pipelines into one stage up to the top-k shuffle.
+    * gate, `src/MetalDistance.mm:341-363`, see [[VectorIndexFlat.useFusedPath]]):
+    * a batch within the byte bound runs the fused [[graft.plans.KnnPartialExec]]
+    * — distance + bounded top-k in one blocked loop per (vector partition,
+    * query block) tile, shuffling ≤ nq·k rows per vector partition and
+    * never materializing a (pair) row per (q, v). A larger batch, or an
+    * index too small for pre-selection to drop anything, runs the
+    * declarative cross-join + aggregate plan, which Catalyst pipelines into
+    * one stage up to the top-k shuffle.
     *
     * Both paths use the identical fp64 left-to-right distance loop and the
     * (dist, id) total order, so their results are bit-identical.
@@ -245,12 +248,18 @@ final class VectorIndexFlat private (
           col("col.score").cast(FloatType).as("dist"))
     }
     val qRows =
-      if (forceDeclarative) Array.empty[Row]
-      else q.limit(VectorIndexFlat.maxFusedQueries + 1).collect()
+      if (forceDeclarative) Array.empty[(Long, Array[Float])]
+      else {
+        import spark.implicits._
+        q.as[(Long, Array[Float])].limit(maxCollectedQueries(d) + 1).collect()
+      }
+    qRows.foreach { case (qid, v) =>
+      require(v != null && v.length == d, s"VectorIndexFlat.search: query $qid has " +
+        s"dimension ${if (v == null) "null" else v.length}, the index has d = $d")
+    }
     val scored =
-      if (!forceDeclarative &&
-          VectorIndexFlat.useFusedPath(qRows.length, cachedNtotal, k))
-        fusedPartials(qRows, k)
+      if (!forceDeclarative && useFusedPath(qRows.length, d, cachedNtotal, k))
+        fusedPartialsData(qRows.toSeq, k)
       else {
         val dist = metric match {
           case Metric.L2           => squaredL2(col("vec"), col("qvec"))
@@ -277,15 +286,12 @@ final class VectorIndexFlat private (
     * which reads the vector column straight from the scan's `ArrayData`
     * (no per-row encoder copy).
     */
-  private def fusedPartials(qRows: Array[Row], k: Int): DataFrame =
-    fusedPartialsData(qRows.map(r => (r.getLong(0), r.getSeq[Float](1).toArray)).toSeq, k)
-
   private def fusedPartialsData(qData: Seq[(Long, Array[Float])], k: Int): DataFrame = {
     // reduced-precision storage feeds the 16-bit column STRAIGHT into the
-    // fused loop (element decode in-register, ref simdgroup_gemm.metal
-    // f16/bf16 tiles) — the scan moves half the bytes and no fp32 array
-    // is materialized per row, unlike the declarative path's dequantize
-    // projection
+    // fused operator, which decodes each element once into its reused row
+    // buffer (ref simdgroup_gemm.metal f16/bf16 tiles) — the scan moves half
+    // the bytes and no fp32 column is materialized, unlike the declarative
+    // path's dequantize projection
     val (src, dec) = storage match {
       case StorageType.Float32  => (data.select(col("id"), col("vec")), 0)
       case StorageType.Float16  => (data.select(col("id"), col("vech")), 1)
@@ -538,16 +544,21 @@ final class PointSearcher private[index] (
 
 object VectorIndexFlat {
 
-  /** Fused-path gate: query batches up to this size are collected and
-    * broadcast (analog of the reference's nq ≤ 4 fused gate — ours is
-    * wider because a CPU partition loop has no threadgroup-memory limit).
+  /** Byte bound on the query batch `search` collects (8 B of qid + 4 B per
+    * element a row) to choose and feed the fused path. The declarative path
+    * broadcasts the same rows, so this bounds driver memory, not exposure;
+    * at d = 128 it admits 32k queries.
     */
-  val maxFusedQueries = 1024
+  val maxFusedQueryBytes: Long = 16L << 20
 
-  /** Per-partition fused top-k state budget, in (nq·k) heap rows — beyond
-    * this the bounded buffers themselves dominate partition memory and the
-    * declarative plan's streaming aggregate is the safer shape (the analog
-    * of the reference's k ≤ 32 fused bound, `src/MetalDistance.mm:341-353`).
+  private[graft] def maxCollectedQueries(d: Int): Int =
+    (maxFusedQueryBytes / (8L + 4L * d)).toInt
+
+  /** Per-task fused top-k state budget, in (nq·k) heap rows: the fused
+    * operator splits each vector partition's queries into enough blocks
+    * that one task holds at most this many (the analog of the reference's
+    * k ≤ 32 fused bound, `src/MetalDistance.mm:341-353`, which it enforces
+    * by refusing rather than tiling).
     */
   val maxFusedStateRows: Long = 1L << 22
 
@@ -559,16 +570,18 @@ object VectorIndexFlat {
     */
   val minFusedNtotalFactor = 4L
 
-  /** Cost-model choice of physical path from (nq, ntotal, k) — the Spark
+  /** Cost-model choice of physical path from (nq, d, ntotal, k) — the Spark
     * analog of the reference's fused gate (`src/MetalDistance.mm:341-353`:
-    * nq·nv ≥ 8M ∧ nq ≤ 4 ∧ k ≤ 32). All three operands are known exactly
-    * at plan time (ntotal is index metadata, not an estimate). Both paths
-    * are proven bit-identical, so the gate affects cost only.
+    * nq·nv ≥ 8M ∧ nq ≤ 4 ∧ k ≤ 32). Fused when the collected batch fits
+    * `maxFusedQueryBytes` and the index holds at least
+    * `minFusedNtotalFactor · k` vectors; query count and k are otherwise
+    * unbounded, because the operator tiles queries to keep each task's
+    * state within `maxFusedStateRows`. All operands are known exactly at
+    * plan time (ntotal is index metadata, not an estimate). Both paths are
+    * proven bit-identical, so the gate affects cost only.
     */
-  private[graft] def useFusedPath(nq: Int, nv: Long, k: Int): Boolean =
-    nq <= maxFusedQueries &&
-      nq.toLong * k <= maxFusedStateRows &&
-      nv >= minFusedNtotalFactor * k
+  private[graft] def useFusedPath(nq: Int, d: Int, nv: Long, k: Int): Boolean =
+    nq <= maxCollectedQueries(d) && nv >= minFusedNtotalFactor * k
 
   private val rawSchema = StructType(Seq(
     StructField("id", LongType, nullable = false),

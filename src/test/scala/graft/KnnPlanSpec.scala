@@ -53,6 +53,22 @@ class KnnPlanSpec extends AnyFunSuite {
     }
   }
 
+  test("one vector partition: query blocks use every core, partials stay ≤ vparts·nq·k") {
+    val par = spark.sparkContext.defaultParallelism
+    val nq = par + 3
+    val k = 5
+    val vdf = vecDf(200, 16).coalesce(1)
+    val qs = Oracle.genVectors(nq, 16, seed = 7).zipWithIndex.map { case (v, i) => (i.toLong, v) }.toSeq
+    val partials = Knn.partials(vdf, qs, k, ascending = false, innerProduct = true, decode = 0)
+    assert(partials.queryExecution.toRdd.getNumPartitions >= math.min(nq, par))
+    assert(partials.count() <= 1L * nq * k)
+    // explain() names the gate's inputs and the tiling, not the query list
+    val plan = partials.queryExecution.executedPlan.toString
+    assert(plan.contains(s"KnnPartial nq=$nq k=$k metric=ip decode=fp32 qBlocks=${math.min(nq, par)}"), plan)
+    assert(partials.queryExecution.optimizedPlan.toString.contains(s"Knn nq=$nq k=$k metric=ip"))
+    assert(!plan.contains("[F@"), plan)
+  }
+
   private def vecDf(n: Int, d: Int, seed: Long = 42): org.apache.spark.sql.DataFrame = {
     val schema = org.apache.spark.sql.types.StructType(Seq(
       org.apache.spark.sql.types.StructField("id",

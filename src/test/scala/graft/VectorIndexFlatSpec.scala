@@ -326,31 +326,64 @@ class VectorIndexFlatSpec extends AnyFunSuite {
   test("physical paths agree EXACTLY: fused KnnPartialExec vs declarative cross-join+agg") {
     // the analog of the reference's forced-MPS vs default-path test
     // (tests/test_metal_flat.mm:270-307) — ours is bit-exact because both
-    // paths share the same fp64 loop and total order
-    val d = 64
-    val idx = VectorIndexFlat(spark, d, Metric.L2)
-    idx.add(Oracle.genVectors(300, d).toSeq)
-    val qs = Oracle.queriesDf(spark, Oracle.genVectors(7, d, seed = 4242))
-    val fused = idx.search(qs, 5).orderBy("qid", "rank").collect()
-    val declarative = idx.search(qs, 5, forceDeclarative = true)
-      .orderBy("qid", "rank").collect()
-    assert(fused === declarative)
-    val ip = VectorIndexFlat(spark, d, Metric.InnerProduct)
-    ip.add(Oracle.genVectors(300, d, seed = 9).toSeq)
-    assert(ip.search(qs, 5).orderBy("qid", "rank").collect() ===
-      ip.search(qs, 5, forceDeclarative = true).orderBy("qid", "rank").collect())
+    // paths share the same fp64 loop and total order. 600 vectors sit in one
+    // partition, so nq = 1100, k = 100 splits into several query blocks;
+    // nq = 7 leaves a remainder beside the four-query passes
+    val d = 16
+    val blocks = graft.plans.Knn.queryBlocks(1, 1100, 100, spark.sparkContext.defaultParallelism)
+    assert(blocks > 1)
+    for {
+      metric <- Seq(Metric.L2, Metric.InnerProduct)
+      storage <- Seq(StorageType.Float32, StorageType.Float16, StorageType.BFloat16)
+    } {
+      val idx = VectorIndexFlat(spark, d, metric, storage)
+      idx.add(Oracle.genVectors(600, d, seed = 9).toSeq)
+      assert(idx.vectors.rdd.getNumPartitions === 1)
+      for ((nq, k) <- Seq((7, 5), (1100, 100))) {
+        val qs = Oracle.queriesDf(spark, Oracle.genVectors(nq, d, seed = 4242))
+        val fusedDf = idx.search(qs, k)
+        val fused = fusedDf.orderBy("qid", "rank").collect()
+        val plan = fusedDf.queryExecution.executedPlan.toString
+        assert(plan.contains("KnnPartial"), s"$metric/$storage nq=$nq: expected fused in\n$plan")
+        if (nq == 1100) assert(plan.contains(s"qBlocks=$blocks"), plan)
+        val declarative = idx.search(qs, k, forceDeclarative = true)
+          .orderBy("qid", "rank").collect()
+        assert(fused.length === nq * k)
+        assert(fused === declarative, s"$metric/$storage nq=$nq k=$k")
+      }
+      idx.reset()
+    }
+  }
+
+  test("search rejects queries whose dimension differs from the index's, on both paths") {
+    val d = 8
+    val fused = VectorIndexFlat(spark, d)
+    fused.add(Oracle.genVectors(300, d).toSeq)
+    val tiny = VectorIndexFlat(spark, d) // 10 < 4·k vectors: declarative
+    tiny.add(Oracle.genVectors(10, d).toSeq)
+    for (idx <- Seq(fused, tiny); qd <- Seq(d - 1, d + 1)) {
+      val qs = Oracle.genVectors(3, d, seed = 5) :+ Oracle.genVectors(1, qd, seed = 6).head
+      val e = intercept[IllegalArgumentException] {
+        idx.search(Oracle.queriesDf(spark, qs), 5)
+      }
+      assert(e.getMessage.contains("VectorIndexFlat.search"), e.getMessage)
+      assert(e.getMessage.contains(s"dimension $qd"), e.getMessage)
+    }
+    fused.reset(); tiny.reset()
   }
 
   test("cost-model gate: fused vs declarative chosen per (nq, ntotal, k) regime") {
-    import graft.index.VectorIndexFlat.useFusedPath
+    import graft.index.VectorIndexFlat.{maxCollectedQueries, useFusedPath}
     // serving regime: small batch over a big index → fused
-    assert(useFusedPath(nq = 8, nv = 1000000L, k = 10))
-    // huge query batch → declarative (collect/broadcast bound)
-    assert(!useFusedPath(nq = 2000, nv = 1000000L, k = 10))
-    // per-partition top-k state beyond budget → declarative
-    assert(!useFusedPath(nq = 1024, nv = 1000000L, k = 8192))
+    assert(useFusedPath(nq = 8, d = 128, nv = 1000000L, k = 10))
+    // large query batches and large per-batch top-k state are tiled into
+    // query blocks, not refused → fused
+    assert(useFusedPath(nq = 2000, d = 128, nv = 1000000L, k = 10))
+    assert(useFusedPath(nq = 1024, d = 128, nv = 1000000L, k = 8192))
+    // a batch beyond the collected-bytes bound → declarative
+    assert(!useFusedPath(nq = maxCollectedQueries(128) + 1, d = 128, nv = 1000000L, k = 10))
     // tiny index: pre-selection cannot drop anything → declarative
-    assert(!useFusedPath(nq = 8, nv = 30L, k = 10))
+    assert(!useFusedPath(nq = 8, d = 128, nv = 30L, k = 10))
     // the physical plans actually chosen match the model
     val d = 16
     val qs = Oracle.queriesDf(spark, Oracle.genVectors(2, d, seed = 5))
